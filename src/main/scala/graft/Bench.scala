@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** 1-minute loadavg at call time, -1.0 when unreadable (non-Linux) —
     * recorded INTO the board so a drift-state run (the r14 218 s board
@@ -16,48 +15,8 @@ object Bench {
     SparkEntry.initStaging()
     val loadStart = loadAvg1m()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // codegen CLASS cache (static conf, default 100 entries): the 254-
-      // query suite generates ~4-6k whole-stage-codegen units, so at the
-      // default size every query's classes are evicted by its ~15
-      // successors and BOTH timed passes re-run janino compilation for
-      // every stage — the warm-up passes exist precisely to take
-      // compilation out of the timed numbers, and the default cache size
-      // silently defeated them. 5000 entries keeps every class of the
-      // suite resident (~250 MB driver heap, measured stable under the
-      // 8 GiB driver); the timed passes then measure execution, not the
-      // compiler. r15 A/B, full board: 165.1 -> 138.4 s (-16%), median
-      // per-query ratio 0.72 on the 42-query probe, no query regressed
-      // beyond noise. Scale-neutral: compiled-code caching is JIT warmth,
-      // not data caching — every run still computes from parquet.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      // AQE coalescing floor (default 1m): with parallelismFirst the
-      // coalesced partition size is clamped BELOW by this floor, so any
-      // shuffle under ~32 MB collapses to a handful of tasks — which
-      // serializes the engine's compute-heavy, byte-light reducers (HLL
-      // merges, jaccard verifies, posting folds: 100s of ms of CPU per
-      // MB, vs ~ms of per-task overhead). 128k keeps those at full
-      // parallelism; the floor never binds at cluster scale (it is
-      // irrelevant once totalBytes/parallelism > 1 MB), so this is
-      // scale-neutral. r15 A/B (two interleaved pairs, 46-query subset):
-      // board-neutral median, consistent wins on q_prefix_join
-      // (−35-45%), q_web_corpus_funnel (−20-25%), q_inverted_index
-      // (−20%), q_approx_distinct (−15-18%); no consistent loser.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "128k"))
-      .config("spark.ui.enabled", "false")
-      // default is 30min — far longer than a bench session, so broadcast/
-      // shuffle cleanup would otherwise never run between queries
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session.build(cpus)
     // SPARK_GRAFT_ONLY=q_a,q_b isolates queries for regression bisection —
     // a query timed alone vs inside the 82-query session separates its own
     // cost from cross-query JVM effects (GC, codegen-cache pressure)

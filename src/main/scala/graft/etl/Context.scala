@@ -68,14 +68,7 @@ final class Context(
     val metadatas: Map[String, String],
     val uuid: String,
     nodeChunkSize: Long = Context.NodeChunkSize,
-    edgeChunkSize: Long = Context.EdgeChunkSize,
-    fastStaging: Boolean = false) {
-
-  private def writeStaged(
-      df: DataFrame, dir: Path, fileName: Long => String,
-      chunkSize: Long, startChunk: Long): Seq[(String, Long)] =
-    if (fastStaging) Context.writeChunkedCsvFast(df, dir, fileName, chunkSize, startChunk)
-    else Context.writeChunkedCsv(df, dir, fileName, chunkSize, startChunk)
+    edgeChunkSize: Long = Context.EdgeChunkSize) {
 
   // per-context monotonically increasing chunk counters so file suffixes
   // stay unique across multiple save_* calls (context.py:15-16,155,250)
@@ -96,7 +89,7 @@ final class Context(
       label, Catalog.schemaTypes(nodes.schema), metadatas, primaryKey, allConstraints, indexs))
 
     val normalized = Normalize.normalize(nodes, Seq(primaryKey))
-    val written = writeStaged(
+    val written = Context.writeChunkedCsv(
       normalized, store.nodesDir, n => s"FILE_${uuid}_${label}_$n.csv",
       nodeChunkSize, lastNodeChunk)
     lastNodeChunk += written.size
@@ -131,7 +124,7 @@ final class Context(
       edgeType, startLabel, endLabel, metadatas, Catalog.schemaTypes(edges.schema)))
 
     val normalized = Normalize.normalize(edges, Seq("start", "end"))
-    val written = writeStaged(
+    val written = Context.writeChunkedCsv(
       normalized, store.edgesDir,
       n => s"FILE_${uuid}_${startLabel}$edgeType${endLabel}_$n.csv",
       edgeChunkSize, lastEdgeChunk)
@@ -212,54 +205,6 @@ object Context {
         }
       } finally deleteRecursively(tmp) // also on failure: no orphaned .staging dirs
     } finally { chunked.unpersist(); input.unpersist() }
-  }
-
-  /** Performance-path staging (SURVEY §2.6 W1 option (a)): one write pass
-    * bounded by `maxRecordsPerFile` — no zipWithIndex job, no repartition
-    * shuffle. File sizes are bounded-but-uneven rather than exactly-chunked
-    * (task boundaries also split files), and per-file counts come from one
-    * distributed line-count pass over the written files. Preferred at scale;
-    * the faithful path keeps the reference's exact chunk geometry. */
-  def writeChunkedCsvFast(
-      df: DataFrame,
-      dir: Path,
-      fileName: Long => String,
-      chunkSize: Long,
-      startChunk: Long): Seq[(String, Long)] = {
-    val spark = df.sparkSession
-    val tmp = Files.createTempDirectory(dir, ".staging")
-    val renamed = try {
-      df.write
-        .option("maxRecordsPerFile", chunkSize)
-        .option("sep", ";")
-        .option("header", "true")
-        .mode("overwrite")
-        .csv(tmp.toString)
-      val parts = listDir(tmp).filter(_.getFileName.toString.startsWith("part-")).sortBy(_.toString)
-      parts.zipWithIndex.map { case (p, i) =>
-        val name = fileName(startChunk + i)
-        Files.move(p, dir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
-        name
-      }
-    } finally deleteRecursively(tmp) // also on failure: no orphaned .staging dirs
-    if (renamed.isEmpty) return Nil
-    // one distributed pass for per-file counts (minus the header line each)
-    import org.apache.spark.sql.functions.{input_file_name, count => cnt, lit}
-    val counts = spark.read.text(renamed.map(n => dir.resolve(n).toString): _*)
-      .groupBy(input_file_name().as("f")).agg(cnt(lit(1)).as("n"))
-      .collect()
-      .map(r => {
-        // input_file_name() is a URI (percent-encoded) — decode before
-        // matching against the on-disk file names
-        val f = r.getString(0)
-        val path = try new java.net.URI(f).getPath catch { case _: Exception => f }
-        path.substring(path.lastIndexOf('/') + 1) -> (r.getLong(1) - 1)
-      }).toMap
-    renamed.map { n =>
-      val c = counts.getOrElse(n,
-        throw new IllegalStateException(s"no line count for staged file $n"))
-      n -> c
-    }
   }
 
   /** Directory listing that closes its stream (a bare `Files.list` leaks a

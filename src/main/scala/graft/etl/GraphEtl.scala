@@ -32,10 +32,7 @@ final class GraphEtl(
     val outputDir: String = "./output",
     val strictCompat: Boolean = false,
     nodeChunkSize: Long = Context.NodeChunkSize,
-    edgeChunkSize: Long = Context.EdgeChunkSize,
-    /** bounded-but-uneven chunk files via maxRecordsPerFile — one write
-      * pass, no shuffle; the default keeps the reference's exact geometry */
-    fastStaging: Boolean = false) {
+    edgeChunkSize: Long = Context.EdgeChunkSize) {
 
   val store = new StoreInfo(outputDir, spark)
   private val parsers = mutable.LinkedHashMap.empty[String, RegisteredParser]
@@ -83,7 +80,7 @@ final class GraphEtl(
       val filtered = store.filter.exists(_.skipParse(p.metadatas))
       if (!filtered && !shouldSkip(p)) {
         val ctx = new Context(store, p.metadatas, java.util.UUID.randomUUID().toString.take(8),
-          nodeChunkSize, edgeChunkSize, fastStaging)
+          nodeChunkSize, edgeChunkSize)
         val tp = System.nanoTime()
         p.body(ctx)
         // per-parser wall time (utils.py:80-97 save_parser_infos logging)
@@ -112,7 +109,7 @@ final class GraphEtl(
     if (!initialized) init()
     if (!shouldSkip(RegisteredParser(name, metadatas, sourcesPath, ignore, body))) {
       val ctx = new Context(store, metadatas, java.util.UUID.randomUUID().toString.take(8),
-        nodeChunkSize, edgeChunkSize, fastStaging)
+        nodeChunkSize, edgeChunkSize)
       // resume marker + mapping only on success — a parser body that threw
       // must re-run on resume, not be skipped as complete. (The reference's
       // __exit__ runs these even on exception, utils.py:278-283; that marks

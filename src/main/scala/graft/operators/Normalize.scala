@@ -18,10 +18,9 @@ import org.apache.spark.sql.types._
   *   5. sequential row ids -> chunk = id / size   (context.py:126-127)
   *
   * Scale notes (100 TB posture): steps 1-2 are narrow (no shuffle); step 3
-  * is one hash-shuffle on the key; step 5's faithful path uses RDD
-  * zipWithIndex (one extra job to count partition sizes, no shuffle) — the
-  * performance path skips explicit chunk ids entirely and bounds output
-  * files with `maxRecordsPerFile` instead.
+  * is one hash-shuffle on the key; step 5 uses RDD zipWithIndex (one extra
+  * job to count partition sizes, no shuffle), keeping the reference's
+  * exact chunk geometry.
   */
 object Normalize {
 

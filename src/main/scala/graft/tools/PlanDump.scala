@@ -1,36 +1,27 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Debug helper: print the executed physical plan of named SparkEntry
-  * queries (the `.explain`-and-iterate loop PlanSpec pins are written
-  * from). Usage: runMain graft.tools.PlanDump <sfDir> <q1,q2,...> */
+  * queries, or of every query when no list is given (the `.explain`-and-
+  * iterate loop PlanSpec pins are written from: checking pushdown,
+  * pruning and join strategy). The session is the benched one, so dumped
+  * plans carry the partition counts and conf-dependent shapes the board
+  * measures. Usage: runMain graft.tools.PlanDump <sfDir> [q1,q2,...] */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val names = args(1).split(',')
-    // session matches Bench's (r16) so dumped plans carry the same
-    // partition counts / conf-dependent shapes the board measures
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "128k"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val names = args.lift(1).map(_.split(',').toSeq)
+      .getOrElse(graft.SparkEntry.queries.keys.toSeq.sorted)
+    val spark = graft.Session.build()
     names.foreach { n =>
       println(s"\n===== $n =====")
       // EXECUTE before dumping (r16): an unexecuted AdaptiveSparkPlan
       // prints only the initial plan — the dump must show the final
       // stages (AQE partition counts, runtime join selections)
-      val df = graft.SparkEntry.queries(n)(spark, dir)
-      df.queryExecution.toRdd.count()
-      println(df.queryExecution.executedPlan.toString())
+      try {
+        val df = graft.SparkEntry.queries(n)(spark, dir)
+        df.queryExecution.toRdd.count()
+        println(df.queryExecution.executedPlan.toString())
+      } catch { case e: Throwable => println(s"failed: ${e.getMessage}") }
     }
     spark.stop()
   }

@@ -7,8 +7,9 @@ package graft
   *
   * The EXACT-COUNT pins (exchanges == 2, BroadcastHashJoin count == 2, …)
   * deliberately freeze a physical shape under THIS suite's config:
-  * AQE on, default `spark.sql.autoBroadcastJoinThreshold` (10 MB),
-  * `spark.sql.shuffle.partitions` = 32 (see [[SparkSpec]]), sf0.001 inputs.
+  * the benched session at `local[4]` (see [[SparkSpec]]: AQE on,
+  * `spark.sql.shuffle.partitions` = 4, 128k coalescing floor), default
+  * `spark.sql.autoBroadcastJoinThreshold` (10 MB), sf0.001 inputs.
   * If one fails after a Spark upgrade or a config change, first diff the
   * printed plan against the assertion's intent — a count drift with the
   * same join/exchange STRUCTURE is plan-shape drift (update the pin), while
